@@ -44,6 +44,9 @@ driver line now ALSO carries
     BEFORE any long streaming work.  The anchor file records the
     run totals and the 1-min load average at start, so a judge can
     see whether the anchor itself was taken under load.
+  - ``cpus`` / ``default_parallelism``: the N of the session's
+    ``local[N]`` master (``$SPARK_GRAFT_CPUS``) and Spark's default
+    parallelism, so the line itself records the core count it ran on.
 
 Round-15 observation that forced this: the very first run of the
 round (zero code changed since r14's bench) measured run totals
@@ -230,6 +233,10 @@ def main() -> None:
         pass
 
     slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:10])
+    # the parallelism the session actually ran with (VERDICT r18 Next
+    # 2): N of a local[N] master, and Spark's default parallelism
+    sc = spark.sparkContext
+    m_cpus = re.fullmatch(r"local\[(\d+)\]", sc.master)
     # the one-line driver contract object — keep it short, keep it last.
     # `value` is the BEST run (VERDICT r15 directive 7): identical code
     # was measured spreading 41.9 -> 35.7 s best-run across one round
@@ -252,6 +259,8 @@ def main() -> None:
         "sum_of_query_medians_sec": total,
         "index_build_sec": index_build["total"],
         "sf": sf,
+        "cpus": int(m_cpus.group(1)) if m_cpus else None,
+        "default_parallelism": sc.defaultParallelism,
     }
     if anchor_sec is not None:
         line["anchor_sec"] = anchor_sec

@@ -58,10 +58,9 @@ one that is no bigger than the group's running sum (equals merge
 with equals; a big old segment is never dragged into a merge of
 small newcomers), repeating until within budget — each ingested byte
 is rewritten O(log(index / segment)) times instead of the
-O(index / tail) a merge-all policy pays (tools/compaction_bench.py
-measures the write-amplification delta on real index data;
-``compaction_policy="merge_all"`` keeps the r11 behavior for that
-A/B).  Tier-merge segments take ids from a reserved range
+O(index / tail) a merge-all policy pays (measured on real index data,
+tools/compaction_amplification.json: row write amplification 3.8
+tiered vs 8.4 merge-all).  Tier-merge segments take ids from a reserved range
 (>= 10**12) so they can never collide with minor segments, whose id
 IS the compacting batch id (replay-idempotency relies on that).
 
@@ -364,10 +363,6 @@ class StreamingNearDup:
     #: standing (doc_id, md5(text)) relation for the exact fast path;
     #: defaults to a sibling of bands_path
     hashes_path: str | None = None
-    #: "tiered" (size-tiered major compaction, the default) or
-    #: "merge_all" (the r11 policy, kept for write-amplification A/Bs
-    #: — tools/compaction_bench.py).
-    compaction_policy: str = "tiered"
     #: sizing rule for a new segment's bucket count:
     #: n = next_pow2(input_bytes / target_bucket_bytes) clamped to
     #: [n_buckets, max_buckets].  At 8 MiB per bucket a 1 GiB segment
@@ -697,7 +692,7 @@ class StreamingNearDup:
     def _tier_compact_root(self, spark, root: str, data_schema: str,
                            bucket_expr_fn, bucket_col: str,
                            sort_cols: list[str]) -> None:
-        """Major compaction.  tiered = carry-propagation size-tiering:
+        """Major compaction by carry-propagation size-tiering:
         while over budget, start from the two smallest segments and
         absorb each next-larger one only while it is no bigger than
         the group's running sum — equals merge with equals (a carry,
@@ -706,21 +701,18 @@ class StreamingNearDup:
         merge_all at 1000 unit minors / max_segments=8: bytes
         rewritten per ingested byte 3.8 vs 62 (merge_all) vs 25 (a
         naive merge-smallest-k, which snowballs); measured on real
-        index data by tools/compaction_bench.py."""
+        index data in tools/compaction_amplification.json."""
         while True:
             segs = self._segments(root)
             # <= 1 guard: merging a single segment cannot reduce the
             # count — it would rewrite forever under fresh tier ids
             if len(segs) <= max(1, self.max_segments):
                 return
-            if self.compaction_policy == "merge_all":
-                picked = segs
-            else:
-                # ROW-count-keyed carry (see _dir_rows for why not
-                # bytes); _carry_pick ties on list position = segment
-                # id order, so selection is deterministic
-                rows = [_dir_rows(p) for _i, p in segs]
-                picked = [segs[i] for i in _carry_pick(rows)]
+            # ROW-count-keyed carry (see _dir_rows for why not
+            # bytes); _carry_pick ties on list position = segment id
+            # order, so selection is deterministic
+            rows = [_dir_rows(p) for _i, p in segs]
+            picked = [segs[i] for i in _carry_pick(rows)]
             next_id = max(
                 [i for i, _ in segs if i >= _TIER_SEG_BASE],
                 default=_TIER_SEG_BASE - 1) + 1

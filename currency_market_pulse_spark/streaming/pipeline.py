@@ -7,26 +7,28 @@ compose.yml) —
       -> rate-limit GATEWAY (stateful sliding window per user,
          payload carried through; rejects get retry_after)
       -> parse + normalize admitted payloads (P1..P6 chain)
-      -> ParquetTradesSink (date-partitioned, batch-id idempotent)
+      -> TxnParquetTradesSink (date-partitioned, write-once,
+         manifest-committed)
       -> LIVE trends view (manifest-log stream OVER THE SINK's txn
          commit log -> watermarked window aggregation -> in-memory
          queryable table; sources/txn_log_source.py — O(new batches)
          per trigger, no directory listing anywhere)
-    + document stream -> streaming near-dup index probe (bands +
-      shingles standing index, batch-id idempotent) + count-min heavy
-      hitters + optional decontaminate-at-ingest screen + uniform
-      reservoir sample of everything ingested (constant k-row state,
+    + document stream, read and tokenized once per trigger, feeding
+      the streaming near-dup index probe (bands + shingles standing
+      index, batch-id idempotent), count-min heavy hitters, an
+      optional decontaminate-at-ingest screen and a uniform reservoir
+      sample of everything ingested (constant k-row state,
       reservoir_stream.py)
 
-Up to six concurrent streaming queries (two chained through storage,
-four document-side probes); the trends view consumes the SINK's
-files, not the source — so the composition exercises the storage
-hand-off exactly as the reference's trends service reads what the
-importer wrote.  Rejected requests land in a dead-letter parquet with
+Three concurrent streaming queries: import, trends view and the fused
+doc query.  The first two are chained through storage: the trends view
+consumes the SINK's commit log, not the source, so the composition
+exercises the storage hand-off exactly as the reference's trends
+service reads what the importer wrote.  Rejected requests land in a dead-letter parquet with
 their retry_after_ms, mirroring the consumer's HTTP 429 path
 (ratelimit.go:38-62 via rest/api.go).
 
-Delivery semantics: the import sink defaults to the WRITE-ONCE
+Delivery semantics: the import sink is the WRITE-ONCE
 transactional sink (streaming/txn_sink.py — manifest-committed
 publication, every visible file immutable and added exactly once), so
 BOTH the storage AND the live view's file stream are exactly-once
@@ -35,22 +37,21 @@ directive 3; tests/test_txn_sink.py covers the full crash matrix —
 crash before the manifest commit, mid-publish with divergent replayed
 data, post-publish no-op — and proves a readStream.parquet live view
 running THROUGH an injected mid-publish crash-replay of the import
-query ends bit-for-bit equal to the batch result).  The
-pre-r8 gap, kept here for the record: with the plain overwrite sink
-(``txn_sink=False``) a replayed batch rewrites its partition with NEW
-file names, which a path-keyed file source treats as fresh input —
-storage stays exactly-once but the live view double-counts.  That
-mode remains for layout-compatibility comparisons only.
+query ends bit-for-bit equal to the batch result).  A plain
+overwrite sink would not do: a replayed batch rewrites its partition
+with NEW file names, which a path-keyed file source treats as fresh
+input — storage stays exactly-once but the live view double-counts.
 
 At 100 TB nothing here changes shape: the gateway partitions by
-user_id (state ~ in-window requests per user), the sink's dynamic
-partition overwrite keeps replay exactly-once, the live view's state
+user_id (state ~ in-window requests per user), the sink's write-once
+manifest commit keeps replay exactly-once, the live view's state
 is bounded by the watermark, and the near-dup probe runs at
 batch x index cost (queries/dedup.py dedup_incremental).
 """
 
 from __future__ import annotations
 
+import os
 from collections import deque
 from dataclasses import dataclass, field
 
@@ -65,7 +66,6 @@ from currency_market_pulse_spark.streaming.cms_stream import (
 from currency_market_pulse_spark.streaming.decontam_stream import (
     StreamingDecontam,
 )
-from currency_market_pulse_spark.streaming.importer import ParquetTradesSink
 from currency_market_pulse_spark.streaming.txn_sink import (
     TxnParquetTradesSink,
 )
@@ -98,6 +98,18 @@ _DEAD_LETTER_SCHEMA = (
     "user_id string, event_id long, ts_ms long, n_in_window int, "
     "retry_after_ms long, batch_id long")
 
+#: checkpoint dirs of the per-consumer doc queries older deployments
+#: ran instead of the fused ckpt_docs query (run_composed_pipeline's
+#: legacy doc-checkpoint guard)
+_LEGACY_DOC_CKPTS = ("ckpt_neardup", "ckpt_cms", "ckpt_decontam",
+                     "ckpt_reservoir")
+
+
+def _has_offsets(ckpt: str) -> bool:
+    """True when a streaming checkpoint has logged at least one batch."""
+    offsets = os.path.join(ckpt, "offsets")
+    return os.path.isdir(offsets) and bool(os.listdir(offsets))
+
 
 @dataclass
 class ComposedPipeline:
@@ -123,11 +135,11 @@ class ComposedPipeline:
     #: the RESOLVED gateway state layout: None = per-user fold,
     #: int = hash-slot bucket count (after "auto" promotion applied)
     gateway_buckets: "int | None" = None
-    #: fused doc mode only: one dict per trigger with the shared-scan
-    #: and per-consumer wall seconds ({batch_id, n_docs, read_tokenize,
-    #: neardup, cms, decontam, reservoir, total}) — appended from the
-    #: single doc foreachBatch thread; tools/stream_bench.py reads it
-    #: for the per-leg p50/p95 the separate queries used to report.
+    #: one dict per doc trigger with the shared-scan and per-consumer
+    #: wall seconds ({batch_id, n_docs, read_tokenize, neardup, cms,
+    #: decontam, reservoir, total}) — appended from the single doc
+    #: foreachBatch thread; tools/stream_bench.py reads it for the
+    #: per-consumer p50/p95.
     #: RING BUFFER (VERDICT r16 directive 4): a long-lived pipeline
     #: appends one dict per trigger forever (~31M/year at a 1 s tier),
     #: so only the newest DOC_LEG_RETAIN entries are retained — the
@@ -228,7 +240,6 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
                           watermark: str = "10 minutes",
                           trigger: str | None = "1 second",
                           eval_df: DataFrame | None = None,
-                          txn_sink: bool = True,
                           reservoir_k: int = 32,
                           requests_stream: DataFrame | None = None,
                           view_rebuild_days: int | None = None,
@@ -239,13 +250,10 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
                           neardup_shards: int = 1,
                           gateway_buckets: "int | str | None" = "auto",
                           expected_rows_per_trigger: int | None = None,
-                          view_source: str = "manifest",
                           neardup_store: str = "rename",
                           txn_checkpoint_every: int | None = 128,
                           txn_retain_manifests: int | None = 256,
                           txn_publication: str = "rename",
-                          doc_fused: bool = True,
-                          allow_doc_ckpt_reset: bool = False,
                           ) -> ComposedPipeline:
     """Start the full composition and return its handles.
 
@@ -263,26 +271,19 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
     ``view_rebuild_days``: bound the live view's rebuild-from-storage
     window to the newest N trade-date partitions' horizon (VERDICT r10
     directive 4) — see the query-2 comment for semantics and cost.
-    ``view_source``: "manifest" (default — the txn commit-log feed,
-    bounded per-trigger cost) or "listing" (the pre-r14
-    readStream.parquet file stream, O(total sink files) per trigger;
-    only valid pairing for ``txn_sink=False``).
     ``neardup_store``: "rename" (default — atomic-rename segment
     commit, POSIX/HDFS) or "marker" (the object-store publication
     protocol: per-object PUTs + conditional-PUT commit marker, no
     rename anywhere — streaming/segment_store.py).
     ``doc_trigger`` / ``doc_files_per_trigger``: run the BACKGROUND
-    document probes (near-dup, CMS, decontam, reservoir) on a slower,
+    document query (near-dup, CMS, decontam, reservoir) on a slower,
     batchier trigger than the latency-critical import/trends legs —
     e.g. doc_trigger="2 seconds", doc_files_per_trigger=2 keeps doc
     throughput identical while halving their per-trigger fixed costs
     (state commits, python round trips) and their scheduling
     collisions with the import leg's tasks (FAIR shares slots but
     never preempts a running task — SCALE.md Round 12).  Defaults
-    keep every query on ``trigger`` at 1 file per trigger (the r11
-    behavior)."""
-    import os
-
+    keep every query on ``trigger`` at 1 file per trigger."""
     if neardup_store not in ("rename", "marker"):
         raise ValueError(f"unknown neardup_store {neardup_store!r} "
                          "(expected 'rename' or 'marker')")
@@ -303,54 +304,37 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
     elif isinstance(gateway_buckets, str):
         raise ValueError(f"gateway_buckets={gateway_buckets!r} "
                          "(expected an int, None, or 'auto')")
-    if view_source not in ("manifest", "listing"):
-        raise ValueError(f"unknown view_source {view_source!r} "
-                         "(expected 'manifest' or 'listing')")
-    if view_source == "manifest" and not txn_sink:
-        raise ValueError("view_source='manifest' requires txn_sink=True "
-                         "(the plain sink writes no manifest log); "
-                         "pass view_source='listing'")
 
-    # ---- doc-checkpoint MIGRATION guard (ADVICE r16, medium): the
-    # fused doc side checkpoints under ckpt_docs; the independent legs
-    # checkpoint under ckpt_{neardup,cms,decontam,reservoir}.  Batch-id
-    # idempotency does NOT protect across a mode switch — a fresh
+    # ---- legacy doc-checkpoint guard (ADVICE r16, medium): older
+    # deployments ran the four doc consumers as separate queries
+    # checkpointed under ckpt_{neardup,cms,decontam,reservoir}; the
+    # fused doc query checkpoints under ckpt_docs.  Batch-id
+    # idempotency does NOT protect across that switch — a fresh
     # checkpoint restarts at batch 0 with NEW batch-id boundaries, so
     # CMS per-batch delta partitions double-count every previously
     # processed doc and near-dup re-probes docs already in the standing
-    # index.  Fail fast when a resume would silently re-ingest; the
-    # migration path is: drain the old deployment, move/clear out_dir's
-    # doc outputs (cms/, decontam_flags/, reservoir/, dups/ + index),
-    # then restart with allow_doc_ckpt_reset=True (or a fresh out_dir).
-    _legacy_legs = [n for n in ("ckpt_neardup", "ckpt_cms",
-                                "ckpt_decontam", "ckpt_reservoir")
-                    if os.path.isdir(os.path.join(out_dir, n))
-                    and os.listdir(os.path.join(out_dir, n))]
-    _fused_ckpt = (os.path.isdir(os.path.join(out_dir, "ckpt_docs"))
-                   and os.listdir(os.path.join(out_dir, "ckpt_docs")))
-    if not allow_doc_ckpt_reset:
-        if doc_fused and _legacy_legs and not _fused_ckpt:
-            raise RuntimeError(
-                "doc_fused=True would start a fresh ckpt_docs checkpoint "
-                f"while legacy per-leg checkpoints exist ({_legacy_legs}): "
-                "the doc dir would be re-ingested from batch 0 with new "
-                "batch-id boundaries (CMS deltas double-count, near-dup "
-                "re-probes indexed docs). Either resume with "
-                "doc_fused=False, or clear the doc outputs and pass "
-                "allow_doc_ckpt_reset=True.")
-        if not doc_fused and _fused_ckpt and not _legacy_legs:
-            raise RuntimeError(
-                "doc_fused=False would start fresh per-leg checkpoints "
-                "while a fused ckpt_docs checkpoint exists: the doc dir "
-                "would be re-ingested from batch 0 (same double-count "
-                "hazard). Either resume with doc_fused=True, or clear "
-                "the doc outputs and pass allow_doc_ckpt_reset=True.")
+    # index.  Fail fast, before any Spark work, when a resume would
+    # silently re-ingest.
+    legacy = [n for n in _LEGACY_DOC_CKPTS
+              if _has_offsets(os.path.join(out_dir, n))]
+    if legacy and not _has_offsets(os.path.join(out_dir, "ckpt_docs")):
+        raise RuntimeError(
+            f"{out_dir} holds per-leg doc checkpoints from an older "
+            f"deployment ({', '.join(legacy)}) but no ckpt_docs: the "
+            "fused doc query would re-ingest the doc dir from batch 0 "
+            "with new batch-id boundaries (CMS deltas double-count, "
+            "near-dup re-probes indexed docs).  Drain the old "
+            "deployment, then clear the doc outputs (cms_sketch/, "
+            "cms_cand/, decontam_flags/, reservoir/, dups/, idx_bands/, "
+            "idx_shingles/, idx_hashes/) and the checkpoint "
+            f"dirs ({', '.join(legacy)}) under {out_dir}, or start on "
+            "a fresh out_dir.")
 
     def _in_pool(name, start_fn):
         # one FAIR pool per streaming query (session.py sets
         # spark.scheduler.mode=FAIR): the pool name is a thread-local
         # property inherited by the query's execution thread at
-        # start(), so the six queries' micro-batch jobs share task
+        # start(), so the three queries' micro-batch jobs share task
         # slots fairly instead of head-of-line-blocking each other.
         sc = spark.sparkContext
         sc.setLocalProperty("spark.scheduler.pool", f"stream-{name}")
@@ -398,8 +382,8 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
         requests, window_ms, limit, buckets=gateway_buckets)
         if gateway_buckets
         else rate_limit_gateway(requests, window_ms, limit))
-    # write-once txn sink by default: the live view's file stream is
-    # exactly-once under crash-replay (module docstring; txn_sink.py)
+    # write-once txn sink: the live view's feed is exactly-once under
+    # crash-replay (module docstring; txn_sink.py)
     # txn_checkpoint_every: Delta-style checkpoint compaction of the
     # sink's txn log — bounds the manifest view's rebuild-from-scratch
     # to one columnar read + <=interval manifest JSONs instead of
@@ -409,8 +393,7 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
     # OFF the per-trigger path for the other 127 batches.
     # txn_publication="put" runs the object-store file-publication
     # twin (copy+fsync, no cross-directory rename — txn_sink.py
-    # OBJECT-STORE PUBLICATION); requires the manifest-fed view,
-    # which is the default pairing anyway.
+    # OBJECT-STORE PUBLICATION).
     # txn_retain_manifests: bound _txn/'s FILE COUNT too — manifests
     # below the durable checkpoint floor are deleted (re-derivable
     # from the checkpoint), keeping the log at O(interval + retain)
@@ -422,11 +405,10 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
     # served) — the composed pipeline is the long-lived deployment
     # surface, and an unbounded control log is an operational leak
     # even when never read.
-    sink = (TxnParquetTradesSink(trades_path,
-                                 checkpoint_every=txn_checkpoint_every,
-                                 retain_manifests=txn_retain_manifests,
-                                 publication=txn_publication)
-            if txn_sink else ParquetTradesSink(trades_path))
+    sink = TxnParquetTradesSink(trades_path,
+                                checkpoint_every=txn_checkpoint_every,
+                                retain_manifests=txn_retain_manifests,
+                                publication=txn_publication)
 
     def import_batch(batch: DataFrame, batch_id: int) -> None:
         # TWO actions consume this micro-batch (sink + dead letter);
@@ -509,35 +491,23 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
         if dates:
             cutoff = (max(_dt.date.fromisoformat(x) for x in dates)
                       - _dt.timedelta(days=view_rebuild_days - 1))
-    # view_source="manifest" (default, VERDICT r13 directive 1): feed
-    # the view from the txn sink's per-batch manifest LOG
-    # (sources/txn_log_source.py) — per-trigger cost is O(new
-    # batches) manifest probes, never a directory listing.  The old
-    # "listing" mode (readStream.parquet over the sink tree) re-lists
-    # the WHOLE sink every trigger to diff its seen-set — O(total
-    # files in history) driver-side work, measured growing 1.6 ->
-    # 3.7 s view p95 across the r13 900 s soak (~4,000 files);
-    # retained only for the plain-overwrite sink, which writes no
-    # manifests (and whose replay double-counting the txn sink was
-    # built to fix — module docstring).
-    if view_source == "manifest":
-        from currency_market_pulse_spark.sources.txn_log_source import (
-            TxnTradesManifestDataSource,
-        )
-        spark.dataSource.register(TxnTradesManifestDataSource)
-        reader = (spark.readStream.format("txn_trades")
-                  .option("path", trades_path))
-        if cutoff is not None:
-            reader = reader.option("cutoffDate", cutoff.isoformat())
-        sink_stream = reader.load()
-    else:
-        sink_stream = (spark.readStream.schema(_SINK_STREAM_SCHEMA)
-                       .parquet(trades_path))
-        if cutoff is not None:
-            # filter on the partition column: pruned files contribute
-            # only listing cost, never content reads
-            sink_stream = sink_stream.filter(
-                F.col("trade_date") >= F.lit(cutoff))
+    # feed the view from the txn sink's per-batch manifest LOG
+    # (sources/txn_log_source.py, VERDICT r13 directive 1) —
+    # per-trigger cost is O(new batches) manifest probes, never a
+    # directory listing.  A readStream.parquet file stream over the
+    # sink tree re-lists the WHOLE sink every trigger to diff its
+    # seen-set — O(total files in history) driver-side work, measured
+    # growing 1.6 -> 3.7 s view p95 across the r13 900 s soak (~4,000
+    # files).
+    from currency_market_pulse_spark.sources.txn_log_source import (
+        TxnTradesManifestDataSource,
+    )
+    spark.dataSource.register(TxnTradesManifestDataSource)
+    reader = (spark.readStream.format("txn_trades")
+              .option("path", trades_path))
+    if cutoff is not None:
+        reader = reader.option("cutoffDate", cutoff.isoformat())
+    sink_stream = reader.load()
     trends_writer = (trends_live(sink_stream, watermark=watermark)
                      .writeStream.format("memory").queryName(trends_view)
                      .option("checkpointLocation", f"{out_dir}/ckpt_trends")
@@ -546,13 +516,8 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
         trends_writer = trends_writer.trigger(processingTime=trigger)
     q_trends = _in_pool("trends", trends_writer.start)
 
-    # ---- query 3: streaming near-dup index probe over the doc stream
+    # ---- query 3: the doc consumers, fused into one doc query
     d_trigger = doc_trigger if doc_trigger is not None else trigger
-    d_files = str(doc_files_per_trigger)
-
-    def _doc_stream():
-        return (spark.readStream.schema("doc_id long, text string")
-                .option("maxFilesPerTrigger", d_files).json(docs_dir))
 
     from currency_market_pulse_spark.streaming.segment_store import (
         MarkerSegmentStore, RenameSegmentStore,
@@ -594,108 +559,87 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
         decontam=sd, heavy_hitters=hh, reservoir=rs,
         gateway_buckets=gateway_buckets)
 
-    if doc_fused:
-        # ---- queries 3-6 FUSED (VERDICT r15 directive 1): ONE doc
-        # stream, ONE foreachBatch that reads + tokenizes the batch
-        # once and drives all four doc consumers off the shared
-        # cached relations.  The four independent legs each re-read
-        # and re-tokenized the SAME file every trigger — 3 of 4
-        # doc-side scans+tokenizations were redundant by construction
-        # (measured: composed tier-1 near-dup p50 3,559 ms vs
-        # 1,900 ms solo).  Every consumer stays batch-id idempotent,
-        # so the single checkpoint replays one batch into all four
-        # handlers safely; outputs are bit-equal to the independent
-        # legs (tokens() is deterministic — pinned in
-        # tests/test_pipeline_stream.py).  Trade-off, stated: the
-        # legs now share one query, so one leg's failure stops the
-        # doc side as a unit (the import/trends legs are unaffected),
-        # and per-leg timings come from doc_leg_s instead of
-        # per-query progress.
-        import time as _time
+    # ONE doc stream, ONE foreachBatch that reads + tokenizes the batch
+    # once and drives all four doc consumers off the shared cached
+    # relations (VERDICT r15 directive 1).  Four independent legs would
+    # each re-read and re-tokenize the SAME file every trigger
+    # (measured: composed tier-1 near-dup p50 3,559 ms vs 1,900 ms
+    # solo).  Every consumer stays batch-id idempotent, so the single
+    # checkpoint replays one batch into all four handlers safely;
+    # outputs are bit-equal to each consumer's standalone ``attach``
+    # query (tokens() is deterministic — pinned in
+    # tests/test_pipeline_stream.py).  Trade-off, stated: the
+    # consumers share one query, so one consumer's failure stops the
+    # doc side as a unit (the import/trends legs are unaffected), and
+    # per-consumer timings come from doc_leg_s instead of per-query
+    # progress.
+    import time as _time
+    from concurrent.futures import ThreadPoolExecutor
 
-        from currency_market_pulse_spark.functions.text import tokens
+    from currency_market_pulse_spark.functions.text import tokens
 
-        from concurrent.futures import ThreadPoolExecutor
+    def doc_batch(batch: DataFrame, batch_id: int) -> None:
+        t0 = _time.time()
+        batch = batch.persist()
+        toks = batch.select(
+            "doc_id", tokens(F.col("text")).alias("_t")).persist()
+        legs = {"batch_id": batch_id}
 
-        def doc_batch(batch: DataFrame, batch_id: int) -> None:
-            t0 = _time.time()
-            batch = batch.persist()
-            toks = batch.select(
-                "doc_id", tokens(F.col("text")).alias("_t")).persist()
-            legs = {"batch_id": batch_id}
+        def _timed(fn, *a, **kw) -> float:
+            # worker threads get fresh JVM threads outside the
+            # query's FAIR pool — pin them back to the doc pool
+            spark.sparkContext.setLocalProperty(
+                "spark.scheduler.pool", "stream-docs")
+            t = _time.time()
+            fn(*a, **kw)
+            return round(_time.time() - t, 4)
 
-            def _timed(fn, *a, **kw) -> float:
-                # worker threads get fresh JVM threads outside the
-                # query's FAIR pool — pin them back to the doc pool
-                spark.sparkContext.setLocalProperty(
-                    "spark.scheduler.pool", "stream-docs")
-                t = _time.time()
-                fn(*a, **kw)
-                return round(_time.time() - t, 4)
+        try:
+            # one pass materializes BOTH caches (toks reads batch)
+            legs["n_docs"] = toks.count()
+            legs["read_tokenize"] = round(_time.time() - t0, 4)
+            # the near-dup probe runs FIRST and alone — its
+            # driver-orchestrated collect sequence is the doc
+            # side's critical path, and light-leg jobs queuing
+            # under it were measured at +0.8 s on its p50; the
+            # three light consumers then overlap with EACH OTHER
+            # over the same caches (their wall is dominated by
+            # fixed job-scheduling floor, so the overlap recovers
+            # most of what sequentializing them would cost).
+            legs["neardup"] = _timed(
+                nd.process_batch, batch, batch_id, toks=toks)
+            with ThreadPoolExecutor(max_workers=3) as pool:
+                futs = {"cms": pool.submit(
+                    _timed, hh.process_batch, batch, batch_id,
+                    toks=toks)}
+                if sd is not None:
+                    futs["decontam"] = pool.submit(
+                        _timed, sd.process_batch, batch, batch_id,
+                        toks=toks)
+                if rs is not None:
+                    futs["reservoir"] = pool.submit(
+                        _timed, rs.process_batch, batch, batch_id)
+                for name, fut in futs.items():
+                    legs[name] = fut.result()
+        finally:
+            toks.unpersist()
+            batch.unpersist()
+        legs["total"] = round(_time.time() - t0, 4)
+        try:
+            legs["rdd_cache_entries"] = (
+                spark.sparkContext._jsc.getPersistentRDDs().size())
+        except Exception:
+            pass
+        pipe_handle.doc_leg_s.append(legs)
 
-            try:
-                # one pass materializes BOTH caches (toks reads batch)
-                legs["n_docs"] = toks.count()
-                legs["read_tokenize"] = round(_time.time() - t0, 4)
-                # the near-dup probe runs FIRST and alone — its
-                # driver-orchestrated collect sequence is the doc
-                # side's critical path, and light-leg jobs queuing
-                # under it were measured at +0.8 s on its p50; the
-                # three light consumers then overlap with EACH OTHER
-                # over the same caches (their wall is dominated by
-                # fixed job-scheduling floor, so the overlap recovers
-                # most of what sequentializing them would cost).
-                legs["neardup"] = _timed(
-                    nd.process_batch, batch, batch_id, toks=toks)
-                with ThreadPoolExecutor(max_workers=3) as pool:
-                    futs = {"cms": pool.submit(
-                        _timed, hh.process_batch, batch, batch_id,
-                        toks=toks)}
-                    if sd is not None:
-                        futs["decontam"] = pool.submit(
-                            _timed, sd.process_batch, batch, batch_id,
-                            toks=toks)
-                    if rs is not None:
-                        futs["reservoir"] = pool.submit(
-                            _timed, rs.process_batch, batch, batch_id)
-                    for name, fut in futs.items():
-                        legs[name] = fut.result()
-            finally:
-                toks.unpersist()
-                batch.unpersist()
-            legs["total"] = round(_time.time() - t0, 4)
-            try:
-                legs["rdd_cache_entries"] = (
-                    spark.sparkContext._jsc.getPersistentRDDs().size())
-            except Exception:
-                pass
-            pipe_handle.doc_leg_s.append(legs)
-
-        doc_writer = (_doc_stream().writeStream
-                      .foreachBatch(doc_batch)
-                      .option("checkpointLocation", f"{out_dir}/ckpt_docs")
-                      .outputMode("update"))
-        if d_trigger:
-            doc_writer = doc_writer.trigger(processingTime=d_trigger)
-        pipe_handle.queries = [q_import, q_trends,
-                               _in_pool("docs", doc_writer.start)]
-        return pipe_handle
-
-    # ---- queries 3-6 as INDEPENDENT legs (doc_fused=False): each
-    # consumer re-reads and re-tokenizes the doc stream — kept for
-    # the fused-vs-independent equality gate and A/B measurement
-    q_dedup = _in_pool("neardup", lambda: nd.attach(
-        _doc_stream(), f"{out_dir}/ckpt_neardup", trigger=d_trigger))
-    queries = [q_import, q_trends, q_dedup]
-    queries.append(_in_pool("cms", lambda: hh.attach(
-        _doc_stream(), f"{out_dir}/ckpt_cms", trigger=d_trigger)))
-    if sd is not None:
-        queries.append(_in_pool("decontam", lambda: sd.attach(
-            _doc_stream(), f"{out_dir}/ckpt_decontam",
-            trigger=d_trigger)))
-    if rs is not None:
-        queries.append(_in_pool("reservoir", lambda: rs.attach(
-            _doc_stream(), f"{out_dir}/ckpt_reservoir",
-            trigger=d_trigger)))
-    pipe_handle.queries = queries
+    doc_writer = (spark.readStream.schema("doc_id long, text string")
+                  .option("maxFilesPerTrigger", str(doc_files_per_trigger))
+                  .json(docs_dir).writeStream
+                  .foreachBatch(doc_batch)
+                  .option("checkpointLocation", f"{out_dir}/ckpt_docs")
+                  .outputMode("update"))
+    if d_trigger:
+        doc_writer = doc_writer.trigger(processingTime=d_trigger)
+    pipe_handle.queries = [q_import, q_trends,
+                           _in_pool("docs", doc_writer.start)]
     return pipe_handle

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 
 def _write(path, rows):
     with open(path, "w") as f:
@@ -46,6 +48,7 @@ def _plant(tmp_path):
     return req, docs
 
 
+@pytest.mark.slow
 def test_composed_pipeline_end_to_end(spark, tmp_path):
     from currency_market_pulse_spark.streaming.pipeline import (
         run_composed_pipeline,
@@ -83,6 +86,7 @@ def test_composed_pipeline_end_to_end(spark, tmp_path):
     assert [(d.new_id, d.dup_of) for d in dups] == [(2, 1)]
 
 
+@pytest.mark.slow
 def test_pipeline_cli_once(spark, tmp_path):
     from currency_market_pulse_spark.__main__ import main
 
@@ -104,6 +108,7 @@ def test_pipeline_cli_once(spark, tmp_path):
                        "closed_trend_windows": 1}
 
 
+@pytest.mark.slow
 def test_composed_pipeline_with_document_screens(spark, tmp_path):
     """Round-7 composition: the same doc stream also feeds the
     count-min heavy-hitter tracker and (with an eval set supplied)
@@ -147,6 +152,7 @@ def test_composed_pipeline_with_document_screens(spark, tmp_path):
     assert res == {1, 2}            # k=32 > corpus: reservoir holds all
 
 
+@pytest.mark.slow
 def test_view_rebuild_window_bounds_boot(spark, tmp_path):
     """Bounded live-view rebuild (VERDICT r10 directive 4): a restart
     with view_rebuild_days=N rebuilds the trends view from only the
@@ -257,41 +263,7 @@ def test_composed_pipeline_bucketed_gateway(spark, tmp_path):
     assert (w.n_trades, w.min, w.max) == (3, 1.1, 2.0)
 
 
-def test_view_source_modes_agree_and_invalid_pairing_refused(
-        spark, tmp_path):
-    """r14: the manifest-log view (default) and the legacy listing
-    view produce the SAME trends rows over the same ingest; the
-    manifest mode without the txn sink (no commit log to read) is
-    refused up front."""
-    import pytest
-
-    from currency_market_pulse_spark.streaming.pipeline import (
-        run_composed_pipeline,
-    )
-
-    with pytest.raises(ValueError, match="txn_sink"):
-        run_composed_pipeline(
-            spark, "unused", "unused", str(tmp_path / "nope"),
-            txn_sink=False, view_source="manifest")
-
-    views = {}
-    for mode in ("manifest", "listing"):
-        (tmp_path / mode).mkdir()
-        req, docs = _plant(tmp_path / mode)
-        pipe = run_composed_pipeline(
-            spark, str(req), str(docs), str(tmp_path / mode / "out"),
-            window_ms=1000, limit=2, trends_view=f"vsm_{mode}",
-            view_source=mode)
-        try:
-            pipe.wait_for(trades=4, dead=1, dups=1, windows=1)
-            views[mode] = sorted(
-                tuple(r) for r in spark.table(f"vsm_{mode}").collect())
-        finally:
-            pipe.stop()
-    assert views["manifest"] == views["listing"]
-    assert views["manifest"]          # the scenario closed a window
-
-
+@pytest.mark.slow
 def test_composed_pipeline_marker_segment_store(spark, tmp_path):
     """r14: the composed pipeline runs its near-dup index on the
     OBJECT-STORE publication protocol (neardup_store='marker' — no
@@ -375,21 +347,34 @@ def test_gateway_auto_is_the_default(spark, tmp_path):
     assert dead[0].user_id == "hot" and dead[0].retry_after_ms == 1000
 
 
+@pytest.mark.slow
 def test_fused_doc_legs_equal_independent(spark, tmp_path):
-    """r15 directive 1's equality gate: the FUSED doc side (one
-    read+tokenize per trigger, shared by near-dup, CMS, decontam,
-    reservoir — the default) produces outputs bit-equal to the four
-    independent legs (doc_fused=False), over a multi-batch corpus
-    with exact copies, near-dups, a distinct doc, and a compaction
-    inside the run.  Also pins the fused handle's per-leg timing
-    record."""
+    """r15 directive 1's equality gate: the pipeline's FUSED doc query
+    (one read+tokenize per trigger, shared by near-dup, CMS, decontam,
+    reservoir) produces outputs bit-equal to the four consumers each
+    started as its own standalone ``attach`` query over the same docs
+    dir — a multi-batch corpus with exact copies, near-dups, a
+    distinct doc, and a compaction inside the run.  Also pins the
+    fused handle's per-leg timing record."""
     import os as _os
 
+    from currency_market_pulse_spark.streaming.cms_stream import (
+        StreamingHeavyHitters,
+    )
+    from currency_market_pulse_spark.streaming.decontam_stream import (
+        StreamingDecontam,
+    )
+    from currency_market_pulse_spark.streaming.neardup_stream import (
+        StreamingNearDup,
+    )
     from currency_market_pulse_spark.streaming.pipeline import (
         run_composed_pipeline,
     )
+    from currency_market_pulse_spark.streaming.reservoir_stream import (
+        StreamingReservoir,
+    )
 
-    def run(tag, fused):
+    def plant(tag):
         base = tmp_path / tag
         base.mkdir()
         req, docs = _plant(base)
@@ -402,52 +387,88 @@ def test_fused_doc_legs_equal_independent(spark, tmp_path):
                                   "d3.json", "d4.json"]):
             _os.utime(docs / name,
                       (2_000_000 + i * 100, 2_000_000 + i * 100))
-        ev = spark.createDataFrame([(900, BASE)],
-                                   "doc_id long, text string")
+        return base, req, docs
+
+    def eval_df():
+        return spark.createDataFrame([(900, BASE)],
+                                     "doc_id long, text string")
+
+    def outputs(nd, hh, sd, rs):
+        return {
+            "dups": sorted((r.new_id, r.dup_of, round(r.jaccard, 9))
+                           for r in nd.read_dups(spark).collect()),
+            "bands": sorted(map(tuple, nd.read_bands(spark).collect())),
+            "hashes": sorted(map(tuple,
+                                 nd.read_hashes(spark).collect())),
+            "shingles": sorted(map(tuple,
+                                   nd.read_shingles(spark).collect())),
+            "sketch": sorted(map(tuple,
+                                 hh.merged_sketch(spark).collect())),
+            "hh": sorted(map(tuple, hh.heavy_hitters(spark).collect())),
+            "flags": sorted((r.doc_id, r.eval_doc_id, r.n_overlap)
+                            for r in sd.read_flags(spark).collect()),
+            "reservoir": sorted(map(tuple, rs.read_reservoir(spark)
+                                    .collect())),
+        }
+
+    def run_fused():
+        base, req, docs = plant("fused")
         pipe = run_composed_pipeline(
             spark, str(req), str(docs), str(base / "out"),
-            window_ms=1000, limit=2, eval_df=ev,
-            trends_view=f"fde_{tag}", neardup_compact_every=2,
-            doc_fused=fused)
+            window_ms=1000, limit=2, eval_df=eval_df(),
+            trends_view="fde_fused", neardup_compact_every=2)
         try:
             pipe.wait_for(trades=4, dead=1, dups=3, windows=1)
             out = pipe.wait_quiescent(stable_secs=4.0)
             assert out[2] >= 3
-            nd, hh, sd, rs = (pipe.neardup, pipe.heavy_hitters,
-                              pipe.decontam, pipe.reservoir)
-            result = {
-                "dups": sorted((r.new_id, r.dup_of,
-                                round(r.jaccard, 9))
-                               for r in nd.read_dups(spark).collect()),
-                "bands": sorted(map(tuple,
-                                    nd.read_bands(spark).collect())),
-                "hashes": sorted(map(tuple,
-                                     nd.read_hashes(spark).collect())),
-                "shingles": sorted(map(tuple, nd.read_shingles(spark)
-                                       .collect())),
-                "sketch": sorted(map(tuple, hh.merged_sketch(spark)
-                                     .collect())),
-                "hh": sorted(map(tuple, hh.heavy_hitters(spark)
-                                 .collect())),
-                "flags": sorted(
-                    (r.doc_id, r.eval_doc_id, r.n_overlap)
-                    for r in sd.read_flags(spark).collect()),
-                "reservoir": sorted(map(tuple, rs.read_reservoir(spark)
-                                        .collect())),
-            }
-            if fused:
-                legs = pipe.doc_leg_s
-                assert legs and all(
-                    k in legs[-1] for k in
-                    ("read_tokenize", "neardup", "cms", "decontam",
-                     "reservoir", "total", "n_docs"))
+            result = outputs(pipe.neardup, pipe.heavy_hitters,
+                             pipe.decontam, pipe.reservoir)
+            legs = pipe.doc_leg_s
+            assert legs and all(
+                k in legs[-1] for k in
+                ("read_tokenize", "neardup", "cms", "decontam",
+                 "reservoir", "total", "n_docs"))
         finally:
             pipe.stop()
         return result
 
-    fused = run("fused", True)
-    indep = run("indep", False)
-    assert fused == indep
+    def run_attached():
+        # the same four consumers, configured as the pipeline
+        # configures them, each on its own stream over the docs dir
+        base, _req, docs = plant("attached")
+        out = base / "out"
+        nd = StreamingNearDup(bands_path=str(out / "idx_bands"),
+                              shingles_path=str(out / "idx_shingles"),
+                              hashes_path=str(out / "idx_hashes"),
+                              dups_path=str(out / "dups"),
+                              compact_every=2)
+        hh = StreamingHeavyHitters(sketch_path=str(out / "cms_sketch"),
+                                   cand_path=str(out / "cms_cand"))
+        sd = StreamingDecontam(eval_df(),
+                               eval_index_path=str(out / "eval_idx"),
+                               flags_path=str(out / "decontam_flags"))
+        rs = StreamingReservoir(reservoir_path=str(out / "reservoir"),
+                                k=32, weight_col=None)
+        queries = []
+        try:
+            for name, consumer in (("neardup", nd), ("cms", hh),
+                                   ("decontam", sd), ("reservoir", rs)):
+                stream = (spark.readStream
+                          .schema("doc_id long, text string")
+                          .option("maxFilesPerTrigger", "1")
+                          .json(str(docs)))
+                queries.append(consumer.attach(
+                    stream, str(out / f"ckpt_{name}")))
+            for q in queries:
+                q.processAllAvailable()
+            return outputs(nd, hh, sd, rs)
+        finally:
+            for q in queries:
+                q.stop()
+
+    fused = run_fused()
+    attached = run_attached()
+    assert fused == attached
     # the scenario actually exercised every output
     assert fused["dups"] and fused["flags"] and fused["sketch"]
     assert {n for n, _, _ in fused["dups"]} == {2, 3, 5}
@@ -475,12 +496,14 @@ def test_doc_leg_timings_ring_buffer():
 
 
 def test_doc_ckpt_mode_switch_fails_fast(tmp_path):
-    """ADVICE r16 (medium): switching doc_fused across a resume
-    silently abandons the other mode's checkpoints — the doc dir
-    would re-ingest from batch 0 with new batch-id boundaries (CMS
-    deltas double-count, near-dup re-probes indexed docs).  The
-    pipeline must fail fast BEFORE starting any query, in both
-    directions, unless the caller opts into the reset."""
+    """ADVICE r16 (medium): resuming on an out_dir whose doc side was
+    checkpointed by the per-consumer doc queries of older deployments
+    would silently abandon those checkpoints — the fused doc query
+    would re-ingest the doc dir from batch 0 with new batch-id
+    boundaries (CMS deltas double-count, near-dup re-probes indexed
+    docs).  The pipeline must fail fast BEFORE starting any query and
+    name the dirs to clear; once ckpt_docs holds offsets the resume
+    goes ahead."""
     import os
 
     import pytest
@@ -494,19 +517,19 @@ def test_doc_ckpt_mode_switch_fails_fast(tmp_path):
     legacy.mkdir(parents=True)
     (legacy / "0").write_text("{}")
     # spark=None proves the guard fires before ANY Spark work
-    with pytest.raises(RuntimeError, match="ckpt_docs"):
+    with pytest.raises(RuntimeError,
+                       match="ckpt_neardup.*no ckpt_docs") as err:
         run_composed_pipeline(None, str(tmp_path / "req"),
-                              str(tmp_path / "docs"), str(out),
-                              doc_fused=True)
-    # reverse direction: fused checkpoint present, independent resume
-    out2 = tmp_path / "out2"
-    fused = out2 / "ckpt_docs" / "offsets"
+                              str(tmp_path / "docs"), str(out))
+    assert "dups/" in str(err.value) and "cms_sketch/" in str(err.value)
+    # nothing was created/cleared by the refusal
+    assert os.path.exists(str(legacy / "0"))
+    assert not os.path.exists(str(out / "ckpt_docs"))
+    # an already-migrated out_dir (ckpt_docs holds offsets) passes the
+    # guard and reaches the Spark work, which spark=None cannot do
+    fused = out / "ckpt_docs" / "offsets"
     fused.mkdir(parents=True)
     (fused / "0").write_text("{}")
-    with pytest.raises(RuntimeError, match="per-leg"):
+    with pytest.raises(AttributeError, match="readStream"):
         run_composed_pipeline(None, str(tmp_path / "req"),
-                              str(tmp_path / "docs"), str(out2),
-                              doc_fused=False)
-    # nothing was created/cleared by the refusals
-    assert os.path.exists(str(legacy / "0"))
-    assert os.path.exists(str(fused / "0"))
+                              str(tmp_path / "docs"), str(out))

@@ -11,6 +11,7 @@ import math
 
 import duckdb
 import pandas as pd
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from currency_market_pulse_spark.operators.trends import trends
@@ -32,6 +33,7 @@ rate = st.one_of(
 trade = st.tuples(offset_s, rate, st.sampled_from(["EUR", "GBP"]))
 
 
+@pytest.mark.slow
 @settings(max_examples=12, deadline=None)
 @given(rows=st.lists(trade, min_size=1, max_size=60))
 def test_trends_matches_duckdb_on_random_trades(spark, rows):

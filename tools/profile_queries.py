@@ -1,5 +1,6 @@
-"""Per-query structural profiler (promoted from tools/profile_r17.py —
-VERDICT r17 "Next round" item 1): for each registered query it records
+"""Per-query structural profiler (VERDICT r17 "Next round" item 1; the
+r17 profiles it grew from are PROFILE_r17_before.json and
+PROFILE_r17_after.json): for each registered query it records
 wall time, Spark JOB count via job-group tracking, stage count, and the
 ``.explain("formatted")`` physical plan.
 
